@@ -31,7 +31,12 @@ object Bench {
     * static counts. SPARK_GRAFT_SHUFFLE overrides for experiments.
     */
   private[graft] def scaledShufflePartitions(dir: String, cpus: Int): Int =
-    math.max(cpus, math.min(1024L, dirMB(dir) / 45L).toInt)
+    scaledShufflePartitions(dirMB(dir), cpus)
+
+  /** The same rule over a source volume given in MB — for a logical
+    * volume that is not one directory (the replicated-corpus audit). */
+  private[graft] def scaledShufflePartitions(sourceMB: Long, floor: Int): Int =
+    math.max(floor, math.min(1024L, sourceMB / 45L).toInt)
 
   /** The ONE engine session posture, shared by every main (Bench,
     * Verify, Soak, ScaleAudit) so a config fix can never miss a caller:
@@ -136,7 +141,7 @@ object Bench {
       val ok =
         try { fn(spark, sfDir).count(); true }
         catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
+          System.err.println(FailureRecord.json("bench", name, e)); false
         }
       // measure before cache teardown so clearCache cost isn't charged
       // to the query

@@ -82,9 +82,9 @@ object ScaleAudit {
       // apply the default 45MB-per-partition rule to its LOGICAL volume
       val spark = Bench.sessionBuilder(s"local[$cpus]",
           sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-            math.max(cpus.toInt, math.min(1024L,
+            Bench.scaledShufflePartitions(
               Bench.dirMB("/root/testdata/sf0.01/documents.parquet") *
-                DupReplicas / 45L).toInt).toString))
+                DupReplicas, cpus.toInt).toString))
         .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       dupHeavyProbe(spark)

@@ -21,8 +21,10 @@ object StreamingOps {
     * and per-batch trigger durations to stderr. A 2× swing in a
     * streaming row then attributes itself: batch count changed → the
     * tree/staging layout moved; same count, per-batch time up → host
-    * drift at the micro-batch floor. stderr, not stdout — Bench's JSON
-    * protocol owns stdout.
+    * drift at the micro-batch floor. Stateful batches also carry each
+    * state operator's store count and commit time, so a width change
+    * (stores) or a commit regression reads off the same line. stderr,
+    * not stdout — Bench's JSON protocol owns stdout.
     */
   def logBatchReceipt(name: String,
       q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
@@ -30,7 +32,9 @@ object StreamingOps {
     val parts = ps.map { p =>
       val ms = Option(p.durationMs.get("triggerExecution"))
         .map(_.longValue).getOrElse(0L)
-      s"b${p.batchId}=${ms}ms(${p.numInputRows}r)"
+      val state = p.stateOperators.map(o =>
+        s",${o.numShufflePartitions}stores,commit=${o.commitTimeMs}ms").mkString
+      s"b${p.batchId}=${ms}ms(${p.numInputRows}r$state)"
     }
     System.err.println(
       s"[stream] $name batches=${ps.length} ${parts.mkString(" ")}")
@@ -844,34 +848,41 @@ object StreamingOps {
         org.apache.spark.sql.streaming.OutputMode.Update())
   }
 
-  /** Stateful-stream shuffle sizing (r17 optimization, guide §2): a
-    * streaming query's `spark.sql.shuffle.partitions` is ALSO its
-    * state-store instance count — pinned into the checkpoint at first
-    * start, and paid as per-store fixed cost (open/commit/snapshot;
-    * RocksDB instance lifecycle for the transformWithState family) on
-    * EVERY micro-batch. Inheriting the batch session default — which
-    * [[graft.Bench.scaledShufflePartitions]] floors at the CORE count
-    * for scan/shuffle parallelism — is wrong for state: at bench scale
-    * it means 32 stores × #stateful-operators × #micro-batches of pure
-    * fixed cost over kilobytes of state. The state floor is lower (8)
-    * because a store's fixed cost dominates until its partition carries
-    * real volume; the same 45 MB/partition data-proportional rule takes
-    * over beyond ~360 MB of source and rises to the 1024 cap — on a
-    * 100 TB stream this yields the cap, so the production posture is
-    * unchanged; only the small-state floor moves. Same-session A/B at
-    * sf0.1 (10-query stateful slice, this host): 65.1 s at 32 → 48.6 s
-    * at 8 — with the 8-run measured under WORSE background load
-    * (calib 0.325 vs 0.225). `SPARK_GRAFT_STREAM_SHUFFLE` overrides for
-    * experiments, mirroring SPARK_GRAFT_SHUFFLE.
+  /** Stateful-stream shuffle sizing: a streaming query's
+    * `spark.sql.shuffle.partitions` is ALSO its state-store instance
+    * count — pinned into the checkpoint at first start, and paid as
+    * per-store fixed cost (RocksDB load, commit and snapshot upload, one
+    * foreachBatch sink file per store) on EVERY micro-batch.
+    *
+    * The rule is ONE WAVE on the host it runs on: the batch formula
+    * [[graft.Bench.scaledShufflePartitions]] (45 MB of source per
+    * partition, capped at 1024) with the floor `min(task slots, 8)`
+    * instead of the core count. Below the data-proportional term, more
+    * stores than slots run in a second wave that pays every per-store
+    * cost again over kilobytes of state; more than 8 stores only adds
+    * fixed cost (r17, 32 cores: 65.1 s at 32 stores → 48.6 s at 8 over
+    * the 10-query stateful slice at sf0.1), so hosts with 8 or more
+    * slots keep the width r17 measured. Beyond ~360 MB of source the
+    * data term takes over and rises to the cap — the production posture
+    * on a large stream is unchanged.
+    *
+    * 4-core receipt (`stream_incremental`, 6 alternating pairs, seeds
+    * 4001-4006, every job DuckDB-correct), 8 stores → 4 stores:
+    * `job_tail_s` 6.23 → 4.98 s (6/6 pairs), `wall_s` 19.26 → 17.09 s
+    * (5/6), `peak_rss_mb` 3173 → 3090 (6/6); the stateful stage of a
+    * micro-batch fell from 455-840 ms to about 300 ms, and
+    * `cooccur_totals_tws` from 4.85-5.35 s to 4.1-4.2 s. A floor of 1
+    * store was rejected: `cooccur_stream`'s complete-mode state needs
+    * width (19.4-20.3 s against 8.1-11.1 s at 8 stores, sf0.1).
     *
     * Results are partitioning-invariant: state keying is logical
     * (groupBy/dropDuplicates/join keys), watermarks are global, and
     * every registered streaming query's output is an orderBy'd
     * aggregate or admitted set — the driver hash gate sees no change.
     */
-  def scaledStatePartitions(sfDir: String): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE").map(_.trim.toInt).getOrElse(
-      math.max(8, math.min(1024L, graft.Bench.dirMB(sfDir) / 45L).toInt))
+  def scaledStatePartitions(spark: SparkSession, sfDir: String): Int =
+    graft.Bench.scaledShufflePartitions(sfDir,
+      math.min(spark.sparkContext.defaultParallelism, 8))
 
   /** Run `body` (which builds AND drains a bounded streaming query) with
     * shuffle partitions sized by [[scaledStatePartitions]]; restore the
@@ -881,7 +892,7 @@ object StreamingOps {
   def withStatePartitions[T](spark: SparkSession, sfDir: String)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, scaledStatePartitions(sfDir).toString)
+    spark.conf.set(key, scaledStatePartitions(spark, sfDir).toString)
     try body
     finally spark.conf.set(key, prev)
   }

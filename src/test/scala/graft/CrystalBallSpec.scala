@@ -6,45 +6,26 @@ import graft.sources.BasketSource
 import graft.operators.{CoOccurrence, CrystalBall}
 
 /** Golden-parity + edge-case suite for the flagship crystal-ball semantics
-  * (SURVEY.md §5): results must equal the reference's committed outputs
-  * under /root/reference/output/, parsed (never byte-compared — stripe map
-  * order in the reference is Java HashMap order).
+  * (SURVEY.md §5): results must equal the reference's outputs, parsed
+  * (never byte-compared — stripe map order in the reference is Java
+  * HashMap order). The goldens are the reconstructed part files under
+  * `src/test/resources/reference-output-reconstructed/`, written by
+  * [[ReferencePort]] and pinned to the reference's quoted anchors by
+  * `ReferencePortSpec`.
   */
 class CrystalBallSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = Specs.spark
-  import java.nio.file.{Files, Paths}
-  import scala.jdk.CollectionConverters._
 
-  private val fixtureLines = Seq(
-    "Mary 34 56 29 12 34 56 92 29 34 12",
-    "Kelly 92 29 12 34 79 29 56 12 34 18")
+  private val fixtureLines = ReferencePort.fixtureLines
 
-  /** Parse `[a, b]\tprob` lines from the Pairs golden output. */
-  private def goldenPairs: Map[(String, String), Double] = {
-    val dir = Paths.get("/root/reference/output/CrystalBallPair")
-    val re = """\[(\S+), (\S+)\]\t(\S+)""".r
-    Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("part-"))
-      .flatMap(p => Files.readAllLines(p).asScala)
-      .collect { case re(a, b, pr) => (a, b) -> pr.toDouble }
-      .toMap
-  }
+  private def goldenPairs: Map[(String, String), Double] =
+    ReferencePort.committed("CrystalBallPair").flatten
+      .map(ReferencePort.parsePair).toMap
 
-  /** Parse `a\t{(b, prob), …, }` stripe lines (Stripes + Hybrid goldens). */
-  private def goldenStripes(variant: String): Map[String, Map[String, Double]] = {
-    val dir = Paths.get(s"/root/reference/output/$variant")
-    val entryRe = """\((\S+), ([0-9.Ee+-]+)\)""".r
-    Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("part-"))
-      .flatMap(p => Files.readAllLines(p).asScala)
-      .filter(_.contains("\t"))
-      .map { line =>
-        val Array(k, rest) = line.split("\t", 2)
-        k -> entryRe.findAllMatchIn(rest)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }.toMap
-  }
+  private def goldenStripes(variant: String): Map[String, Map[String, Double]] =
+    ReferencePort.committed(variant).flatten
+      .map(ReferencePort.parseStripe).toMap
 
   private def computedPairs: Map[(String, String), Double] =
     CrystalBall.pairProbabilities(BasketSource.fromLines(spark, fixtureLines))

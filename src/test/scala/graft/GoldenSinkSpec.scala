@@ -12,22 +12,14 @@ class GoldenSinkSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = Specs.spark
 
-  private val fixtureLines = Seq(
-    "Mary 34 56 29 12 34 56 92 29 34 12",
-    "Kelly 92 29 12 34 79 29 56 12 34 18")
+  private val fixtureLines = ReferencePort.fixtureLines
 
   private def pairs = CrystalBall.pairProbabilities(
     BasketSource.fromLines(spark, fixtureLines))
 
   test("pair text lines byte-match the golden Pairs output") {
-    import scala.jdk.CollectionConverters._
     val got = GoldenSink.pairLines(pairs).collect().map(_.getString(0)).toSet
-    val golden = java.nio.file.Files.list(
-        java.nio.file.Paths.get("/root/reference/output/CrystalBallPair"))
-      .iterator().asScala
-      .filter(_.getFileName.toString.startsWith("part-"))
-      .flatMap(p => java.nio.file.Files.readAllLines(p).asScala)
-      .toSet
+    val golden = ReferencePort.committed("CrystalBallPair").flatten.toSet
     assert(got == golden)
   }
 

@@ -220,18 +220,25 @@ class StreamingSpec extends AnyFunSuite {
     java.nio.file.Files.write(in.resolve("a.txt"), Seq(fixture.head).asJava)
     java.nio.file.Files.write(in.resolve("b.txt"), Seq(fixture(1)).asJava)
     val sink = stage.resolve("sink").toString
-    StreamingOps.withRocksDbStateStore(spark) {
-      val q = StreamingOps.cooccurTotalsTws(spark, in.toString).toDF()
-        .writeStream.outputMode("update")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          StreamingOps.writeBatchIdempotent(b, sink, id)
-        }
-        .option("checkpointLocation", stage.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      assert(q.recentProgress.count(_.numInputRows > 0) == 2,
-        "fixture must drain in exactly two micro-batches")
+    StreamingOps.withStatePartitions(spark, stage.toString) {
+      StreamingOps.withRocksDbStateStore(spark) {
+        val q = StreamingOps.cooccurTotalsTws(spark, in.toString).toDF()
+          .writeStream.outputMode("update")
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+            StreamingOps.writeBatchIdempotent(b, sink, id)
+          }
+          .option("checkpointLocation", stage.resolve("ckpt").toString)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        assert(q.recentProgress.count(_.numInputRows > 0) == 2,
+          "fixture must drain in exactly two micro-batches")
+        // one wave of state stores: min(task slots, 8) — 4 on local[4]
+        val width = math.min(spark.sparkContext.defaultParallelism, 8)
+        val stores = q.recentProgress.map(_.stateOperators.head.numShufflePartitions)
+        assert(stores.nonEmpty && stores.forall(_ == width),
+          s"state-store count ${stores.toSeq}, want $width per batch")
+      }
     }
     val emitted = spark.read.parquet(sink)
     val got = emitted.groupBy(col("product"))
